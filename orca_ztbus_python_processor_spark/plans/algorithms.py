@@ -22,7 +22,6 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window as W
 
 from orca_ztbus_python_processor_spark.functions.stats import guarded_div
 from orca_ztbus_python_processor_spark.plans.registry import Processor
@@ -42,10 +41,14 @@ def _c0(name: str) -> Column:
 # --- FindActiveBusses — reference processor/main.py:342-371:
 # count of distinct active (trip,bus,route) triples in the minute;
 # ValueResult. The J1 join's key triple is functionally determined by
-# trip_id, so countDistinct(trip_id) is the fused form.
+# trip_id, so the distinct trip count is the fused form. It is written
+# as size(collect_set) rather than countDistinct: one aggregate with no
+# distinct rewrite, so the EveryMinute plan shuffles once instead of
+# twice. collect_set skips nulls as countDistinct does, and the set is
+# bounded by the fleet size active in one minute.
 @proc.algorithm("FindActiveBusses", "1.0.0", EVERY_MINUTE)
 def find_active_busses():
-    return F.countDistinct("trip_id")
+    return F.size(F.collect_set("trip_id")).cast("bigint")
 
 
 # --- AmbientTemperature — reference processor/main.py:449-470.
@@ -88,18 +91,21 @@ def service_efficiency():
 # --- ComfortAndSafetyPerMinute — reference processor/main.py:547-573:
 # accel = speed.diff().fillna(0); jerk = accel.diff().fillna(0),
 # computed inside the window's frame (the reference re-reads each
-# window, so diffs reset at window boundaries).
+# window, so diffs reset at window boundaries). Both come from one
+# projection over a single Window node: the previous row's accel is
+# rebuilt from lag(s) and lag(s, 2) instead of lagging the accel
+# column, which would need a second Window over the first. On a
+# partition's first row accel is 0 and lag(s) is null, so jerk is 0
+# there, as pandas' fillna gives.
 def _prepare_accel_jerk(df: DataFrame, time_col: str, keys: tuple[str, ...]) -> DataFrame:
     # partition by the compiler's shared _time_from bucket so the lag
     # shuffle is reused by the final aggregation (one Exchange total)
-    w = W.partitionBy("_time_from", *keys).orderBy(time_col)
-    accel = F.coalesce(
-        F.col("odometry_vehicle_speed") - F.lag("odometry_vehicle_speed").over(w),
-        F.lit(0.0),
-    )
-    df = df.withColumn("accel", accel)
-    jerk = F.coalesce(F.col("accel") - F.lag("accel").over(w), F.lit(0.0))
-    return df.withColumn("jerk", jerk)
+    part = ", ".join(["_time_from", *(f"`{k}`" for k in keys)])
+    over = f"OVER (PARTITION BY {part} ORDER BY {time_col})"
+    s = "odometry_vehicle_speed"
+    accel = f"coalesce({s} - lag({s}) {over}, 0D)"
+    prev_accel = f"coalesce(lag({s}) {over} - lag({s}, 2) {over}, 0D)"
+    return df.selectExpr("*", f"{accel} AS accel", f"{accel} - {prev_accel} AS jerk")
 
 
 @proc.algorithm(

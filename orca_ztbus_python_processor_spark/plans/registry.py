@@ -17,12 +17,20 @@ Execution model:
     compiler-provided ``_time_from`` column so its shuffle is reused
     by the final aggregation — and (b) a dict of named aggregate
     Columns (StructResult) or a single Column (ValueResult).
-  - ``compile_window_type`` applies every prepare once, then fuses all
-    aggregates into one agg, output columns named
-    ``<algorithm>__<field>``.
-  - ``melt_results`` reshapes the wide frame into the reference's
-    result-row shape (FIXTURES.md A5: window struct, algorithm,
-    version, value, payload).
+  - a window type's spec — its aliased aggregate Columns, output
+    names, prepares and melt projection — is built once per (window
+    type, Spark JVM gateway) and reused by every trigger. Registering
+    an algorithm drops that window type's spec. A trigger therefore
+    costs a constant handful of plan-building calls however many
+    algorithms are registered: the ``aggs()`` functions run once per
+    session, not once per trigger.
+  - ``compile_window_type`` is one ``_time_from`` projection, the
+    prepares, one ``groupBy(...).agg`` and one final projection;
+    output columns are named ``<algorithm>__<field>``.
+  - ``melt_results`` is one ``selectExpr`` (``named_struct`` window,
+    ``inline(array(...))`` of per-algorithm rows) that reshapes the
+    wide frame into the reference's result-row shape (FIXTURES.md A5:
+    window struct, algorithm, version, value, payload).
 
 Scale: one shuffle per window type (on window start + keys), partial
 aggregation map-side. Prepares that need ordering (lag) sort within
@@ -33,11 +41,11 @@ local.
 
 from __future__ import annotations
 
+import threading
 from collections.abc import Callable
 from dataclasses import dataclass
 
 from pyspark.sql import Column, DataFrame
-from pyspark.sql import functions as F
 
 from orca_ztbus_python_processor_spark.plans.windows import WindowType
 
@@ -53,9 +61,23 @@ class Algorithm:
     aggs: AggsFn
     prepare: PrepareFn | None = None
 
-    @property
-    def is_value_result(self) -> bool:
-        return not isinstance(self.aggs(), dict)
+
+@dataclass(frozen=True)
+class _Spec:
+    """Everything a trigger needs of one window type's algorithms."""
+
+    prepares: tuple[PrepareFn, ...]
+    agg_cols: tuple[Column, ...]  # aliased ``<algorithm>__<field>``
+    out_names: tuple[str, ...]
+    melt_exprs: tuple[str, str]  # window struct, one row per algorithm
+
+
+def _sql_str(s: str) -> str:
+    return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+
+def _ident(name: str) -> str:
+    return "`" + name.replace("`", "``") + "`"
 
 
 class Processor:
@@ -65,6 +87,10 @@ class Processor:
     def __init__(self, name: str) -> None:
         self.name = name
         self._algorithms: list[Algorithm] = []
+        # (window type name, JVM gateway) -> spec; the aggregate Columns
+        # are JVM objects, so a relaunched gateway gets its own entry
+        self._specs: dict[tuple[str, object], _Spec] = {}
+        self._lock = threading.Lock()
 
     # -- registration ------------------------------------------------------
     def algorithm(
@@ -82,7 +108,9 @@ class Processor:
         """
 
         def deco(fn: AggsFn) -> AggsFn:
-            self._algorithms.append(Algorithm(name, version, window_type, fn, prepare))
+            with self._lock:
+                self._algorithms.append(Algorithm(name, version, window_type, fn, prepare))
+                self._specs = {k: v for k, v in self._specs.items() if k[0] != window_type.name}
             return fn
 
         return deco
@@ -103,6 +131,62 @@ class Processor:
             "hours": 3_600_000_000,
         }[unit]
         return int(qty) * scale
+
+    def _spec(self, df: DataFrame, window_type: WindowType) -> _Spec:
+        key = (window_type.name, df.sparkSession.sparkContext._gateway)
+        with self._lock:
+            spec = self._specs.get(key)
+            if spec is None:
+                spec = self._specs[key] = self._build_spec(window_type)
+        return spec
+
+    def _build_spec(self, window_type: WindowType) -> _Spec:
+        algs = self.algorithms_for(window_type)
+        if not algs:
+            raise ValueError(f"no algorithms registered for {window_type.name}")
+
+        prepares: list[PrepareFn] = []
+        agg_cols: list[Column] = []
+        out_names: list[str] = []
+        rows: list[str] = []
+        for a in algs:
+            if a.prepare is not None and a.prepare not in prepares:
+                prepares.append(a.prepare)
+            aggs = a.aggs()
+            if isinstance(aggs, dict):
+                names = {f: f"{a.name}__{f}" for f in aggs}
+                agg_cols += [c.alias(names[f]) for f, c in aggs.items()]
+                out_names += names.values()
+                value = "CAST(NULL AS DOUBLE)"
+                payload = "map(" + ", ".join(
+                    f"{_sql_str(f)}, CAST({_ident(n)} AS DOUBLE)" for f, n in names.items()
+                ) + ")"
+            else:
+                name = f"{a.name}__value"
+                agg_cols.append(aggs.alias(name))
+                out_names.append(name)
+                value = f"CAST({_ident(name)} AS DOUBLE)"
+                payload = "CAST(NULL AS MAP<STRING, DOUBLE>)"
+            rows.append(
+                f"named_struct('algorithm', {_sql_str(a.name)}, "
+                f"'version', {_sql_str(a.version)}, 'value', {value}, 'payload', {payload})"
+            )
+
+        metadata = ", ".join(
+            f"{_sql_str(k)}, CAST({_ident(k)} AS BIGINT)" for k in window_type.keys
+        )
+        window = (
+            "named_struct('time_from', time_from, 'time_to', time_to, "
+            f"'name', {_sql_str(window_type.name)}, "
+            f"'version', {_sql_str(window_type.version)}, "
+            f"'origin', {_sql_str(self.name)}, 'metadata', map({metadata})) AS window"
+        )
+        return _Spec(
+            prepares=tuple(prepares),
+            agg_cols=tuple(agg_cols),
+            out_names=tuple(out_names),
+            melt_exprs=(window, f"inline(array({', '.join(rows)}))"),
+        )
 
     def compile_window_type(
         self,
@@ -125,91 +209,25 @@ class Processor:
         Exchange total instead of two, which at 100 TB halves the
         shuffled volume of the fact table.
         """
-        algs = self.algorithms_for(window_type)
-        if not algs:
-            raise ValueError(f"no algorithms registered for {window_type.name}")
-
-        keys = list(window_type.keys)
+        spec = self._spec(df, window_type)
+        keys = window_type.keys
         dur_us = self._duration_us(duration)
-        prepared = df.withColumn(
-            "_time_from",
-            F.expr(f"timestamp_micros((unix_micros({time_col}) div {dur_us}) * {dur_us})"),
+        prepared = df.selectExpr(
+            "*", f"timestamp_micros((unix_micros({time_col}) div {dur_us}) * {dur_us}) AS _time_from"
         )
-        seen: set[int] = set()
-        for a in algs:
-            if a.prepare is not None and id(a.prepare) not in seen:
-                prepared = a.prepare(prepared, time_col, tuple(keys))
-                seen.add(id(a.prepare))
-
-        agg_cols: list[Column] = []
-        for a in algs:
-            spec = a.aggs()
-            if isinstance(spec, dict):
-                for field_name, col in spec.items():
-                    agg_cols.append(col.alias(f"{a.name}__{field_name}"))
-            else:
-                agg_cols.append(spec.alias(f"{a.name}__value"))
-
+        for prepare in spec.prepares:
+            prepared = prepare(prepared, time_col, keys)
         return (
             prepared.groupBy("_time_from", *keys)
-            .agg(*agg_cols)
-            .select(
-                F.col("_time_from").alias("time_from"),
-                (F.col("_time_from") + F.expr(f"INTERVAL {dur_us} MICROSECONDS")).alias(
-                    "time_to"
-                ),
-                *keys,
-                *[c for a in algs for c in self._out_cols(a)],
+            .agg(*spec.agg_cols)
+            .selectExpr(
+                "_time_from AS time_from",
+                f"_time_from + INTERVAL {dur_us} MICROSECONDS AS time_to",
+                *[_ident(c) for c in (*keys, *spec.out_names)],
             )
         )
-
-    @staticmethod
-    def _out_cols(a: Algorithm) -> list[Column]:
-        spec = a.aggs()
-        if isinstance(spec, dict):
-            return [F.col(f"{a.name}__{k}") for k in spec]
-        return [F.col(f"{a.name}__value")]
 
     def melt_results(self, fused: DataFrame, window_type: WindowType) -> DataFrame:
         """Wide fused frame → reference result rows (FIXTURES.md A5):
         ``window struct, algorithm, version, value, payload``."""
-        algs = self.algorithms_for(window_type)
-        keys = list(window_type.keys)
-        window_struct = F.struct(
-            F.col("time_from"),
-            F.col("time_to"),
-            F.lit(window_type.name).alias("name"),
-            F.lit(window_type.version).alias("version"),
-            F.lit(self.name).alias("origin"),
-            F.create_map(
-                *[x for k in keys for x in (F.lit(k), F.col(k).cast("long"))]
-            ).alias("metadata"),
-        )
-
-        per_alg = []
-        for a in algs:
-            spec = a.aggs()
-            if isinstance(spec, dict):
-                payload = F.create_map(
-                    *[
-                        x
-                        for k in spec
-                        for x in (F.lit(k), F.col(f"{a.name}__{k}").cast("double"))
-                    ]
-                )
-                value = F.lit(None).cast("double")
-            else:
-                payload = F.lit(None).cast("map<string,double>")
-                value = F.col(f"{a.name}__value").cast("double")
-            per_alg.append(
-                F.struct(
-                    F.lit(a.name).alias("algorithm"),
-                    F.lit(a.version).alias("version"),
-                    value.alias("value"),
-                    payload.alias("payload"),
-                )
-            )
-
-        return fused.select(
-            window_struct.alias("window"), F.explode(F.array(*per_alg)).alias("r")
-        ).select("window", "r.algorithm", "r.version", "r.value", "r.payload")
+        return fused.selectExpr(*self._spec(fused, window_type).melt_exprs)

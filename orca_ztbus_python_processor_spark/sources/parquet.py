@@ -36,13 +36,20 @@ def _stat_signature(path: str) -> tuple:
     mtime_ns) — not just the first sorted part — so a rewrite/append
     that leaves parts[0] byte-identical still invalidates the memo
     (ADVICE r12: a stale plan would otherwise serve a frozen file
-    listing that misses new parts or reads dropped ones)."""
+    listing that misses new parts or reads dropped ones). Part files
+    under partition directories (``p_date=*/``, as
+    ``sinks.write_time_partitioned`` lays a table out) are folded in
+    with their relative path, so rewriting a partitioned table
+    invalidates the memo too."""
     if os.path.isdir(path):
         sig = []
-        for p in sorted(os.listdir(path)):
-            if p.endswith(".parquet") and not p.startswith(("_", ".")):
-                st = os.stat(os.path.join(path, p))
-                sig.append((p, st.st_size, st.st_mtime_ns))
+        for root, dirs, files in os.walk(path):
+            dirs[:] = sorted(d for d in dirs if not d.startswith(("_", ".")))
+            rel = os.path.relpath(root, path)
+            for p in sorted(files):
+                if p.endswith(".parquet") and not p.startswith(("_", ".")):
+                    st = os.stat(os.path.join(root, p))
+                    sig.append((os.path.join(rel, p), st.st_size, st.st_mtime_ns))
         return tuple(sig)
     st = os.stat(path)
     return (st.st_size, st.st_mtime_ns)

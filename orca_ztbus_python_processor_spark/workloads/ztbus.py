@@ -170,7 +170,8 @@ def ztbus_fused_minute(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 # ztbus_active_busses_minute — the EveryMinute ValueResult algorithm
 # (FindActiveBusses, reference processor/main.py:342-371) through the
-# same compiler: global minute grain, one fused countDistinct.
+# same compiler: global minute grain, one distinct trip count
+# (size(collect_set), so the plan shuffles once).
 # --------------------------------------------------------------------------
 @CATALOG.query(
     "ztbus_active_busses_minute",

@@ -112,6 +112,21 @@ def test_registry_fused_plan_single_shuffle(spark, catalog):
     assert _n_exchanges(plan) == 1, plan
 
 
+def test_active_busses_plan_single_shuffle(spark, catalog):
+    """FindActiveBusses is size(collect_set), not countDistinct: no
+    distinct rewrite, so the EveryMinute plan shuffles once."""
+    plan = _plan(spark, catalog.queries["ztbus_active_busses_minute"](spark, SMOKE_SF_DIR))
+    assert _n_exchanges(plan) == 1, plan
+
+
+def test_ztbus_fused_plan_one_window_one_shuffle(spark, catalog):
+    """The accel/jerk prepare is one projection over a single Window
+    node, and that Window shares its shuffle with the fused groupBy."""
+    plan = _plan(spark, catalog.queries["ztbus_fused_minute"](spark, SMOKE_SF_DIR))
+    assert len(re.findall(r"\(\d+\) Window\b", plan)) == 1, plan
+    assert _n_exchanges(plan) == 1, plan
+
+
 def test_exists_plans_as_semi_join(spark, catalog):
     """EXISTS (Q4 shape) must plan as a semi join — rows never widen —
     with the date filter pushed to the orders scan."""

@@ -38,6 +38,24 @@ def test_date_partitioned_write_prunes(spark, tmp_path):
     assert narrowed.count() > 0
 
 
+def test_read_table_sees_partitioned_rewrite(spark, tmp_path):
+    """read_table's memo must not serve a stale file listing after a
+    date-partitioned table is rewritten in place: its top level holds
+    only ``p_date=*/`` directories, so the nested part files have to
+    count in the freshness signature."""
+    def days(n: int):
+        return spark.range(n * 10).select(
+            F.col("id"),
+            F.timestamp_seconds(F.lit(1_700_006_400) + (F.col("id") % n) * 86_400).alias("ts"),
+        )
+
+    path = str(tmp_path / "dated.parquet")
+    write_time_partitioned(days(1), path, time_col="ts")
+    assert read_table(spark, str(tmp_path), "dated").count() == 10
+    write_time_partitioned(days(3), path, time_col="ts")
+    assert read_table(spark, str(tmp_path), "dated").count() == 30
+
+
 def test_bucketed_fused_minute_zero_exchange(spark):
     """The real workload on the bucketed layout: the registry-fused
     minute aggregation over user_id-bucketed events must plan with ZERO
