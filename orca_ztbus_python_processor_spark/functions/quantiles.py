@@ -8,47 +8,43 @@ per-key grain (groups of ~60 rows), a scale wall at corpus grain
 sf1 fixture). ``approx_percentile`` is the sketch path when error is
 acceptable; this module is the EXACT corpus-grain path.
 
-Round-13 engine (guide §1.2/§2.4): ITERATIVE HISTOGRAM SELECTION — the
-classic distributed selection algorithm (bisection on value range with
-per-bucket counts), replacing round 11/12's range-repartition +
-per-partition-window addressing:
+One selection engine, ``_hist_rank_select``, serves every entry point
+(``exact_group_quantiles``, ``exact_group_rank_values``,
+``exact_weighted_quantiles`` and ``functions.ranks.with_global_ntiles_cuts``):
+ITERATIVE HISTOGRAM SELECTION — the classic distributed selection
+algorithm (bisection on value range with per-bucket counts):
 
-  1. one map-combinable pass per group: count, min, max — n_groups
-     scalars to the driver (guarded, see ``_MAX_GROUPS``);
+  1. one map-combinable pass per group: count, finite min/max, and the
+     rows (and weight) of each value block — n_groups rows to the
+     driver (guarded, see ``_MAX_GROUPS``). Values sort in Spark's
+     order, -Inf < finite < +Inf < NaN, so every non-finite block holds
+     one value: a target that falls in one resolves on the driver with
+     no scan, and finite targets bisect over the finite rows only;
   2. per refinement pass, ONE map-combinable aggregation computes, for
      every unresolved (group, value-interval), a B-bucket histogram of
-     (count, exact min, exact max) — n_intervals x B scalars to the
-     driver, never rows. The driver walks each histogram's cumulative
-     counts to locate the bucket holding each target rank;
+     (count, weight, exact min, exact max) — n_intervals x B scalars to
+     the driver, never rows. The driver walks each histogram's
+     cumulative counts (weights, for weighted quantiles) to locate the
+     bucket holding each target;
   3. a bucket whose min == max IS the answer (ties collapse); a bucket
      with <= ``_COLLECT_LIMIT`` rows is fetched and finished exactly on
      the driver; anything larger refines over [bucket_min, bucket_max]
      (each pass cuts the candidate value range by ~B, so doubles
      converge in <= ~6 passes; 1 pass + 1 bounded fetch is typical).
 
-Versus the range-shuffle form this removes, per invocation: the
-RangePartitioner sampling job, a full shuffle of every row, two
-``localCheckpoint`` pins (the executor-loss fragility VERDICT r12 #4
-flagged), and a per-partition window sort. What remains is 2-4 scans
-of the narrow input with tiny aggregation traffic — at 100 TB the
-bytes that cross the network drop from "the whole column, once" to
-"n_intervals x B scalars per pass". Results are EXACTLY the values at
-the requested ranks of the sorted multiset — bit-identical to the old
-form (same doubles picked, same interpolation arithmetic), verified
-caller-by-caller against the DuckDB oracle.
-
-Inputs containing NaN/±Inf values (which break value-range bisection)
-fall back to the proven range-shuffle forms kept below — a
-deterministic, data-dependent routing, decided by the same pass-1
-aggregate either path needs.
+No sampling job, no shuffle of rows and no ``localCheckpoint`` pins:
+2-4 scans of the narrow input with tiny aggregation traffic — at 100 TB
+the bytes that cross the network are "n_intervals x B scalars per
+pass". Results are EXACTLY the values at the requested ranks of the
+sorted multiset, verified caller-by-caller against the DuckDB oracle.
 """
 
 from __future__ import annotations
 
-import bisect
 import math
 from collections import defaultdict
 
+import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
@@ -74,9 +70,13 @@ _FETCH_BUDGET = 4_000_000
 # misuse of corpus-grain machinery, not a workload.
 _MAX_GROUPS = 100_000
 # Bisection on IEEE doubles cuts the representable range by ~B per
-# pass; 20 passes is unreachable without NaN/Inf (routed out in pass
-# 1) — a hard stop against an undiscovered degeneracy, not a tunable.
+# pass, and non-finite values never enter an interval (pass-1 value
+# blocks), so 20 passes is unreachable — a hard stop against an
+# undiscovered degeneracy, not a tunable.
 _MAX_HIST_PASSES = 20
+# Pass-1 value blocks in Spark's ascending order; all but "fin" hold a
+# single value.
+_BLOCKS = ("ninf", "fin", "pinf", "nan")
 
 
 def _check_group_guard(n_groups: int, where: str) -> None:
@@ -109,55 +109,83 @@ def _interval_case(intervals: dict, value_expr) -> object:
     return expr
 
 
+def _walk(cells: list, below, targets: list, eps: float):
+    """Yield ``(cell, below_cell, picked)`` for each cell that picks a
+    target: ``cells`` are ``(count, measure, lo, hi)`` in ascending
+    value order, cumulated from ``below``; a sorted target t goes to
+    the first cell whose cumulative measure reaches ``t - eps``. A
+    target still unreached after the last cell (float rounding of
+    fractional weights) goes to the last cell."""
+    ti = 0
+    cum = below
+    for i, cell in enumerate(cells):
+        last = i == len(cells) - 1
+        picked = []
+        while ti < len(targets) and (last or targets[ti] - eps <= cum + cell[1]):
+            picked.append(targets[ti])
+            ti += 1
+        if picked:
+            yield cell, cum, picked
+        cum += cell[1]
+
+
 def _hist_rank_select(
     src: DataFrame,
-    rank_sets: dict,
+    groups: dict,
+    weight: str | None = None,
+    eps: float = 0.0,
 ) -> dict:
-    """Exact values at requested ranks per group via iterative histogram
-    selection (module docstring).
+    """Exact values at requested cumulative targets per group via
+    iterative histogram selection (module docstring).
 
-    ``src``: columns ``g`` (any atomic type, no NULL-group targets
-    needed — NULL groups simply get no entry) and ``v`` (double,
-    non-NULL, finite — caller verifies via its pass-1 stats).
-    ``rank_sets``: {g: (n, min, max, {rank, ...})} with 1-indexed ranks
-    in [1, n_g].
+    ``src``: columns ``g`` (any atomic type; NULL groups need no
+    entry), ``v`` (double, non-NULL) and, with ``weight``, that weight
+    column (double, positive, finite). ``groups``: {g: (cells,
+    targets)} — ``cells`` the group's level-0 cells ``(count, measure,
+    lo, hi)`` in ascending value order (``_blocks`` of its pass-1 row),
+    ``targets`` the cumulative measures to select: 1-indexed ranks in
+    [1, n_g] without a weight, cumulative weights with one. A target t
+    selects the smallest value whose cumulative measure reaches
+    ``t - eps`` (``eps`` is 0 for counts and integral weights).
 
-    Returns {(g, rank): (value, n_below, n_eq)} where ``value`` is the
-    exact double at that rank of the group's ascending sorted multiset,
-    ``n_below`` the count of group rows strictly below it and ``n_eq``
-    the count equal to it (every row of one value lands in one bucket,
-    so both counts are exact whichever path resolves the target).
+    Returns {(g, t): (value, below, eq)} where ``value`` is the exact
+    double at t, ``below`` the group's measure strictly below it and
+    ``eq`` the measure equal to it (every row of one value lands in one
+    bucket, so both are exact whichever step resolves the target).
     """
     B = _HIST_BUCKETS
+    w = [weight] if weight else []
+    measure = F.sum(weight) if weight else F.count("*")
 
-    # interval state: iid -> [g, lo, hi, abs_below, targets]
-    # targets: list of (local_rank 1-indexed within interval, group rank)
+    # interval state: iid -> [g, lo, hi, below, targets]
     pending: dict[int, list] = {}
     resolved: dict = {}
     to_fetch: dict[int, list] = {}
     fetch_rows = 0
     next_iid = 0
 
-    def _settle(g, lo, hi, count, abs_below, targets) -> None:
-        """Route an interval: resolved / fetch / refine."""
+    def _settle(g, cell, below, targets) -> None:
+        """Route a cell's targets: resolved / fetch / refine."""
         nonlocal next_iid, fetch_rows
-        if lo == hi:
-            # single-value interval: all `count` rows equal `lo`
-            for _lr, gr in targets:
-                resolved[(g, gr)] = (lo, abs_below, count)
+        count, m, lo, hi = cell
+        if not lo < hi:
+            # one value (NaN block included: NaN < NaN is false)
+            for t in targets:
+                resolved[(g, t)] = (lo, below, m)
             return
+        iv = [g, lo, hi, below, targets]
         if count <= _COLLECT_LIMIT and fetch_rows + count <= _FETCH_BUDGET:
             fetch_rows += count
-            to_fetch[next_iid] = [g, lo, hi, abs_below, targets]
+            to_fetch[next_iid] = iv
         else:
-            pending[next_iid] = [g, lo, hi, abs_below, targets]
+            pending[next_iid] = iv
         next_iid += 1
 
-    for g, info in rank_sets.items():
-        n, mn, mx, ranks = info
-        if not ranks:
-            continue
-        _settle(g, mn, mx, n, 0, sorted((r, r) for r in ranks))
+    for g, (cells, targets) in groups.items():
+        if targets:
+            cells = [c for c in cells if c[0]]
+            for cell, below, picked in _walk(cells, 0, sorted(targets), eps):
+                _settle(g, cell, below, picked)
 
     passes = 0
     while pending:
@@ -165,78 +193,84 @@ def _hist_rank_select(
         if passes > _MAX_HIST_PASSES:
             raise RuntimeError(
                 "histogram selection failed to converge "
-                f"({_MAX_HIST_PASSES} passes) — NaN/Inf should have been "
-                "routed to the shuffle fallback"
+                f"({_MAX_HIST_PASSES} passes over finite values)"
             )
         current, pending = pending, {}
         cells = (
-            src.select(_interval_case(current, True).alias("_cell"), "v")
+            src.select(_interval_case(current, True).alias("_cell"), "v", *w)
             .where(F.col("_cell").isNotNull())
             .groupBy("_cell")
             .agg(
                 F.count("*").alias("_c"),
+                measure.alias("_m"),
                 F.min("v").alias("_mn"),
                 F.max("v").alias("_mx"),
             )
             .toPandas()
         )
         per_iv: dict[int, list] = defaultdict(list)
-        for cell, c, mnb, mxb in zip(
-            cells["_cell"], cells["_c"], cells["_mn"], cells["_mx"]
+        for cell, c, m, mnb, mxb in zip(
+            cells["_cell"], cells["_c"], cells["_m"], cells["_mn"], cells["_mx"]
         ):
             per_iv[int(cell) // B].append(
-                (int(cell) % B, int(c), float(mnb), float(mxb))
+                (int(cell) % B, (int(c), m.item(), float(mnb), float(mxb)))
             )
-        for iid, (g, lo, hi, abs_below, targets) in current.items():
-            buckets = sorted(per_iv[iid])
-            cum = 0
-            ti = 0  # targets sorted by local rank
-            for _b, c, mnb, mxb in buckets:
-                picked = []
-                while ti < len(targets) and targets[ti][0] <= cum + c:
-                    lr, gr = targets[ti]
-                    picked.append((lr - cum, gr))
-                    ti += 1
-                if picked:
-                    _settle(g, mnb, mxb, c, abs_below + cum, picked)
-                cum += c
+        for iid, (g, _lo, _hi, below, targets) in current.items():
+            iv_cells = [c for _b, c in sorted(per_iv[iid])]
+            for cell, cell_below, picked in _walk(iv_cells, below, targets, eps):
+                _settle(g, cell, cell_below, picked)
 
     if to_fetch:
         pdf = (
-            src.select(_interval_case(to_fetch, False).alias("_iid"), "v")
+            src.select(_interval_case(to_fetch, False).alias("_iid"), "v", *w)
             .where(F.col("_iid").isNotNull())
             .toPandas()
         )
-        for iid, (g, lo, hi, abs_below, targets) in to_fetch.items():
-            vs = pdf.loc[pdf["_iid"] == iid, "v"].to_numpy()
-            vs.sort()
-            for lr, gr in targets:
-                v = float(vs[lr - 1])
-                # n strictly below = first index holding v (ties collapse)
-                left = int(bisect.bisect_left(vs, v))
-                resolved[(g, gr)] = (
-                    v,
-                    abs_below + left,
-                    int(bisect.bisect_right(vs, v)) - left,
-                )
+        for iid, part in pdf.groupby("_iid"):
+            g, _lo, _hi, below, targets = to_fetch[iid]
+            # measure per distinct value: equal values share their
+            # cumulative measure (RANGE-frame semantics)
+            vals, inv = np.unique(part["v"].to_numpy(), return_inverse=True)
+            m = np.bincount(inv, weights=part[weight].to_numpy() if weight else None)
+            cum = below + np.cumsum(m)
+            for t in targets:
+                i = min(int(np.searchsorted(cum, t - eps)), len(vals) - 1)
+                resolved[(g, t)] = (float(vals[i]), (cum[i] - m[i]).item(), m[i].item())
     return resolved
 
 
-def _group_value_stats(src: DataFrame) -> list:
-    """Pass 1: per-group (n, min, max, n_nonfinite) — the only
-    unconditional driver traffic, one map-combinable aggregation."""
-    return (
-        src.groupBy("g")
-        .agg(
-            F.count("v").alias("n"),
-            F.min("v").alias("mn"),
-            F.max("v").alias("mx"),
-            F.sum(
-                (F.isnan("v") | (F.abs(F.col("v")) == float("inf"))).cast("long")
-            ).alias("bad"),
-        )
-        .collect()
-    )
+def _value_stats(src: DataFrame, weight: str | None = None, extra=()) -> list:
+    """Pass 1, per group ``g``: ``n`` (non-NULL values), finite ``mn``
+    / ``mx``, rows ``c_<block>`` per value block and, with ``weight``,
+    its weight ``m_<block>`` — the only unconditional driver traffic,
+    one map-combinable aggregation (plus the caller's ``extra``)."""
+    v = F.col("v")
+    fin = ~F.isnan(v) & (F.abs(v) != math.inf)
+    conds = {"ninf": v == -math.inf, "fin": fin, "pinf": v == math.inf, "nan": F.isnan(v)}
+    aggs = [
+        F.count("v").alias("n"),
+        F.min(F.when(fin, v)).alias("mn"),
+        F.max(F.when(fin, v)).alias("mx"),
+    ]
+    for b in _BLOCKS:
+        aggs.append(F.count(F.when(conds[b], 1)).alias(f"c_{b}"))
+        if weight:
+            aggs.append(F.sum(F.when(conds[b], F.col(weight))).alias(f"m_{b}"))
+    return src.groupBy("g").agg(*aggs, *extra).collect()
+
+
+def _blocks(r, weighted: bool = False) -> list:
+    """A pass-1 row as ``_hist_rank_select`` level-0 cells."""
+    bounds = {
+        "ninf": (-math.inf, -math.inf),
+        "fin": (r["mn"], r["mx"]),
+        "pinf": (math.inf, math.inf),
+        "nan": (math.nan, math.nan),
+    }
+    return [
+        (r[f"c_{b}"], float(r[f"m_{b}"] or 0.0) if weighted else r[f"c_{b}"], *bounds[b])
+        for b in _BLOCKS
+    ]
 
 
 def exact_group_quantiles(
@@ -261,10 +295,8 @@ def exact_group_quantiles(
         df.select(F.col(group_col).alias("g"), F.col(value_col).cast("double").alias("v"))
         .where(F.col("v").isNotNull())
     )
-    stats = _group_value_stats(src)
+    stats = _value_stats(src)
     _check_group_guard(len(stats), "exact_group_quantiles")
-    if any(r["bad"] for r in stats):
-        return _exact_group_quantiles_shuffle(df, group_col, value_col, qs)
 
     rank_sets: dict = {}
     picks: dict = {}  # g -> list of (q, lo_rank, hi_rank, frac)
@@ -281,7 +313,7 @@ def exact_group_quantiles(
             ranks.add(lo + 1)
             ranks.add(hi + 1)
             gp.append((q, lo + 1, hi + 1, frac))
-        rank_sets[g] = (n, r["mn"], r["mx"], ranks)
+        rank_sets[g] = (_blocks(r), ranks)
         picks[g] = (n, gp)
 
     sel = _hist_rank_select(src, rank_sets)
@@ -334,10 +366,8 @@ def exact_group_rank_values(
         df.select(F.col(group_col).alias("g"), F.col(value_col).cast("double").alias("v"))
         .where(F.col("v").isNotNull())
     )
-    stats = _group_value_stats(src)
+    stats = _value_stats(src)
     _check_group_guard(len(stats), "exact_group_rank_values")
-    if any(r["bad"] for r in stats):
-        return _exact_group_rank_values_shuffle(df, group_col, value_col, ranks_of_n)
 
     labels = None
     rank_sets: dict = {}
@@ -357,7 +387,7 @@ def exact_group_rank_values(
             for rank in rmap.values()
             if rank is not None and 1 <= int(rank) <= n
         }
-        rank_sets[g] = (n, r["mn"], r["mx"], ranks)
+        rank_sets[g] = (_blocks(r), ranks)
 
     sel = _hist_rank_select(src, rank_sets)
     rows = []
@@ -401,260 +431,63 @@ def exact_weighted_quantiles(
     (the lower weighted quantile — the definition both engines can
     state identically, so results hash-match; with integer-valued
     weights every cumulative sum is exact in doubles regardless of
-    summation order).
+    summation order). Equal values share their cumulative weight
+    (RANGE-frame semantics); values sort -Inf < finite < +Inf < NaN.
 
-    Histogram-selection path (module docstring) for integer-valued
-    weights: per-bucket weight sums locate the crossing bucket, the
-    bounded fetch finishes exactly (ties share their cumulative weight
-    — RANGE-frame semantics — because equal values are summed before
-    comparison). Fractional weights fall back to the range-shuffle
-    form, whose epsilon analysis covers their summation-order error.
+    Pass 1 plus one ``_hist_rank_select`` over a single group, walking
+    cumulative weight instead of counts. Rows with a NULL value or a
+    NULL / non-positive weight are skipped; a NaN or infinite weight
+    raises ``ValueError``.
 
     Output: ``q (double), wq (float32 value), total_weight (double)``.
     """
     spark = df.sparkSession
     src = (
         df.select(
+            F.lit(0).alias("g"),
             F.col(value_col).cast("double").alias("v"),
             F.col(weight_col).cast("double").alias("w"),
         )
         .where(F.col("v").isNotNull() & F.col("w").isNotNull() & (F.col("w") > 0))
     )
-    st = src.agg(
-        F.count("*").alias("n"),
-        F.sum("w").alias("tw"),
-        F.min("v").alias("mn"),
-        F.max("v").alias("mx"),
-        F.max(F.abs(F.col("w") - F.round(F.col("w")))).alias("frac"),
-        F.sum(
-            (
-                F.isnan("v")
-                | (F.abs(F.col("v")) == float("inf"))
-                | F.isnan("w")
-                | (F.abs(F.col("w")) == float("inf"))
-            ).cast("long")
-        ).alias("bad"),
-    ).first()
+    w = F.col("w")
+    stats = _value_stats(
+        src,
+        "w",
+        (
+            F.sum("w").alias("tw"),
+            F.max(F.abs(w - F.round(w))).alias("frac"),
+            F.count(F.when(F.isnan(w) | (F.abs(w) == math.inf), 1)).alias("bad_w"),
+        ),
+    )
     out_schema = "q double, wq float, total_weight double"
-    if not st["n"]:
+    if not stats:
         return spark.createDataFrame([], out_schema)
-    if st["bad"] or float(st["frac"] or 0.0) != 0.0:
-        return _exact_weighted_quantiles_shuffle(df, value_col, weight_col, qs)
-
-    total_w = float(st["tw"])
-    # integral weights: cumulative sums exact in doubles (n * w <= 2^53
-    # for any realistic corpus), so selection is exact with eps = 0.
-    targets = sorted((float(q) * total_w, float(q)) for q in qs)
-
-    B = _HIST_BUCKETS
-    # interval state: (lo, hi, base_cum_w, targets=[(local_target_w, q)])
-    pending = [(float(st["mn"]), float(st["mx"]), [(t, q) for t, q in targets])]
-    answers: dict[float, float] = {}
-    passes = 0
-    while pending:
-        lo, hi, tgts = pending.pop()
-        if lo == hi:
-            for _t, q in tgts:
-                answers[q] = lo
-            continue
-        passes += 1
-        if passes > _MAX_HIST_PASSES:
-            raise RuntimeError("weighted histogram selection failed to converge")
-        b = F.least(
-            F.floor((F.col("v") - F.lit(lo)) / (F.lit(hi) - F.lit(lo)) * B),
-            F.lit(B - 1),
-        ).cast("int")
-        cells = sorted(
-            (r["_b"], r["_c"], r["_sw"], r["_mn"], r["_mx"])
-            for r in src.where(F.col("v").between(F.lit(lo), F.lit(hi)))
-            .groupBy(b.alias("_b"))
-            .agg(
-                F.count("*").alias("_c"),
-                F.sum("w").alias("_sw"),
-                F.min("v").alias("_mn"),
-                F.max("v").alias("_mx"),
-            )
-            .collect()
+    st = stats[0]
+    if st["bad_w"]:
+        raise ValueError(
+            f"exact_weighted_quantiles: weight column {weight_col!r} holds "
+            f"{st['bad_w']} NaN or infinite weight(s)"
         )
-        cum = 0.0
-        ti = 0
-        for _b, c, sw, mnb, mxb in cells:
-            picked = []
-            while ti < len(tgts) and tgts[ti][0] <= cum + sw:
-                picked.append((tgts[ti][0] - cum, tgts[ti][1]))
-                ti += 1
-            if picked:
-                if mnb == mxb:
-                    for _t, q in picked:
-                        answers[q] = mnb
-                elif c <= _COLLECT_LIMIT:
-                    pdf = (
-                        src.where(F.col("v").between(F.lit(mnb), F.lit(mxb)))
-                        .select("v", "w")
-                        .toPandas()
-                    )
-                    by_v: dict[float, float] = defaultdict(float)
-                    for vv, ww in zip(pdf["v"], pdf["w"]):
-                        by_v[float(vv)] += float(ww)
-                    cw = 0.0
-                    vi = 0
-                    vs = sorted(by_v.items())
-                    for t_local, q in picked:
-                        while vi < len(vs) and cw + vs[vi][1] < t_local:
-                            cw += vs[vi][1]
-                            vi += 1
-                        answers[q] = vs[vi][0]
-                else:
-                    pending.append((mnb, mxb, picked))
-            cum += sw
-        # float-rounding tail: a target can be left unpicked only if it
-        # exceeds the interval's total cumulative weight; integral
-        # weights make cum exact, so any leftover target belongs to the
-        # last non-empty bucket (defensive; unreachable on this path).
-        while ti < len(tgts):
-            lastb = cells[-1]
-            pending.append((lastb[3], lastb[4], [(lastb[2], tgts[ti][1])]))
-            ti += 1
-
-    rows = [(q, answers[q], total_w) for q in [float(q) for q in qs]]
+    total_w = float(st["tw"])
+    # Selection tolerance (ADVICE r6-r8). Integer-valued weights make
+    # every cumulative sum exact in doubles (up to 2^53): eps = 0,
+    # exact selection. Fractional weights: bucket and fetch sums round
+    # differently from the q * total_w targets, so a cumulative weight
+    # can land a few ulps below a target it reaches. Each side carries
+    # at most n additions, each off by <= ulp(total_w): eps = 2 n ulp —
+    # orders of magnitude below any legitimate weight gap, which a flat
+    # fraction of total_w would not be.
+    eps = (
+        0.0
+        if float(st["frac"]) == 0.0
+        else 2.0 * st["n"] * math.ulp(max(total_w, 1.0))
+    )
+    targets = {float(q) * total_w for q in qs}
+    sel = _hist_rank_select(src, {0: (_blocks(st, weighted=True), targets)}, "w", eps)
+    rows = [(float(q), sel[(0, float(q) * total_w)][0], total_w) for q in qs]
     return spark.createDataFrame(rows, out_schema).select(
         "q", f32(F.col("wq")).alias("wq"), "total_weight"
-    )
-
-
-# ---------------------------------------------------------------------------
-# Range-shuffle forms (rounds 11-12) — kept as the NaN/Inf and
-# fractional-weight fallbacks. Two-pass partition-offset addressing:
-# range-repartition, per-(partition, group) counts to the driver, one
-# window bounded by PARTITION size, broadcast target join. See git
-# history for the full derivation; the lazy localCheckpoints pin the
-# narrow projection so the RangePartitioner's sampling job and the
-# shuffle don't each re-run the caller's upstream.
-# ---------------------------------------------------------------------------
-
-
-def _exact_group_quantiles_shuffle(
-    df: DataFrame,
-    group_col: str,
-    value_col: str,
-    qs: tuple[float, ...] = (0.25, 0.5, 0.75),
-) -> DataFrame:
-    spark = df.sparkSession
-    g_type = df.schema[group_col].dataType.simpleString()
-    src = (
-        df.select(F.col(group_col).alias("g"), F.col(value_col).cast("double").alias("v"))
-        .where(F.col("v").isNotNull())
-        .localCheckpoint(eager=False)
-    )
-    nparts = max(spark.sparkContext.defaultParallelism, 2)
-    s = src.repartitionByRange(nparts, "g", "v").localCheckpoint(eager=False)
-    s = s.withColumn("pid", F.spark_partition_id())
-
-    cells = s.groupBy("pid", "g").count().collect()
-    per_g: dict = defaultdict(list)
-    for r in cells:
-        per_g[r["g"]].append((r["pid"], r["count"]))
-
-    targets, totals = [], []
-    for g, gcells in per_g.items():
-        gcells.sort()  # pid order == ascending (g, v) range order
-        n = sum(c for _, c in gcells)
-        totals.append((g, n))
-        offs, off = [], 0
-        for pid, c in gcells:
-            offs.append((pid, off, c))
-            off += c
-        for q in qs:
-            r = q * (n - 1)
-            lo, hi = math.floor(r), math.ceil(r)
-            frac = r - lo
-            picks = [(lo, 1.0 - frac)] + ([(hi, frac)] if hi != lo else [])
-            for rank, wgt in picks:
-                for pid, start, c in offs:
-                    if start <= rank < start + c:
-                        targets.append((pid, g, rank - start, float(q), wgt))
-                        break
-
-    tdf = F.broadcast(
-        spark.createDataFrame(
-            targets, f"pid int, g {g_type}, lr long, q double, w double"
-        )
-    )
-    ndf = F.broadcast(spark.createDataFrame(totals, f"g {g_type}, n long"))
-
-    lr = F.row_number().over(W.partitionBy("pid", "g").orderBy("v")) - 1
-    picked = s.withColumn("lr", lr.cast("long")).join(tdf, ["pid", "g", "lr"])
-    agg = [
-        f32(F.sum(F.when(F.col("q") == qv, F.col("w") * F.col("v")))).alias(
-            f"p{int(round(qv * 100))}"
-        )
-        for qv in qs
-    ]
-    return (
-        picked.groupBy("g")
-        .agg(*agg)
-        .join(ndf, "g")
-        .select(F.col("g").alias(group_col), "n", *[f"p{int(round(q * 100))}" for q in qs])
-    )
-
-
-def _exact_group_rank_values_shuffle(
-    df: DataFrame,
-    group_col: str,
-    value_col: str,
-    ranks_of_n,
-) -> DataFrame:
-    spark = df.sparkSession
-    g_type = df.schema[group_col].dataType.simpleString()
-    src = (
-        df.select(F.col(group_col).alias("g"), F.col(value_col).cast("double").alias("v"))
-        .where(F.col("v").isNotNull())
-        .localCheckpoint(eager=False)
-    )
-    nparts = max(spark.sparkContext.defaultParallelism, 2)
-    s = src.repartitionByRange(nparts, "g", "v").localCheckpoint(eager=False)
-    s = s.withColumn("pid", F.spark_partition_id())
-
-    cells = s.groupBy("pid", "g").count().collect()
-    per_g: dict = defaultdict(list)
-    for r in cells:
-        per_g[r["g"]].append((r["pid"], r["count"]))
-
-    targets, totals, labels = [], [], None
-    for g, gcells in per_g.items():
-        gcells.sort()
-        n = sum(c for _, c in gcells)
-        totals.append((g, n))
-        rmap = ranks_of_n(n)
-        if labels is None:
-            labels = list(rmap)
-        elif list(rmap) != labels:
-            raise ValueError(f"inconsistent rank labels: {list(rmap)} vs {labels}")
-        for label, rank in rmap.items():
-            if rank is None or not (1 <= int(rank) <= n):
-                continue
-            rank0 = int(rank) - 1
-            start = 0
-            for pid, c in gcells:
-                if start <= rank0 < start + c:
-                    targets.append((pid, g, rank0 - start, label))
-                    break
-                start += c
-
-    tdf = F.broadcast(
-        spark.createDataFrame(targets, f"pid int, g {g_type}, lr long, lbl string")
-    )
-    ndf = spark.createDataFrame(totals, f"g {g_type}, n long")
-
-    lr = F.row_number().over(W.partitionBy("pid", "g").orderBy("v")) - 1
-    picked = s.withColumn("lr", lr.cast("long")).join(tdf, ["pid", "g", "lr"])
-    agg = [
-        F.min(F.when(F.col("lbl") == label, F.col("v"))).alias(label)
-        for label in (labels or [])
-    ]
-    return (
-        ndf.join(F.broadcast(picked.groupBy("g").agg(*agg)), "g", "left")
-        .select(F.col("g").alias(group_col), "n", *(labels or []))
     )
 
 
@@ -686,8 +519,8 @@ def group_prefix_sum(
     nparts = max(spark.sparkContext.defaultParallelism, 2)
     s = (
         # pin the input so the range sampler and the shuffle don't each
-        # re-run the caller's upstream (module docstring); lazy: the
-        # sampling job itself materializes the blocks
+        # re-run the caller's upstream; lazy: the sampling job itself
+        # materializes the blocks
         df.localCheckpoint(eager=False)
         .repartitionByRange(nparts, group_col, order_col)
         .localCheckpoint(eager=False)
@@ -722,92 +555,4 @@ def group_prefix_sum(
         s.join(odf, ["_pid", group_col])
         .withColumn(out_col, F.col("_off") + local)
         .drop("_pid", "_off")
-    )
-
-
-def _exact_weighted_quantiles_shuffle(
-    df: DataFrame,
-    value_col: str,
-    weight_col: str,
-    qs: tuple[float, ...] = (0.25, 0.5, 0.75, 0.9, 0.99),
-) -> DataFrame:
-    spark = df.sparkSession
-    src = (
-        df.select(
-            F.col(value_col).cast("double").alias("v"),
-            F.col(weight_col).cast("double").alias("w"),
-        )
-        .where(F.col("v").isNotNull() & F.col("w").isNotNull() & (F.col("w") > 0))
-        .localCheckpoint(eager=False)
-    )
-    nparts = max(spark.sparkContext.defaultParallelism, 2)
-    s = src.repartitionByRange(nparts, "v").localCheckpoint(eager=False)
-    s = s.withColumn("pid", F.spark_partition_id())
-
-    part_stats = s.groupBy("pid").agg(
-        F.sum("w").alias("sw"),
-        F.count("*").alias("n"),
-        F.max(F.abs(F.col("w") - F.round(F.col("w")))).alias("frac"),
-    ).collect()
-    cells = sorted((r["pid"], r["sw"]) for r in part_stats)
-    n_rows = int(sum(r["n"] for r in part_stats))
-    integral_w = all(float(r["frac"] or 0.0) == 0.0 for r in part_stats)
-    total_w = float(sum(c for _, c in cells))
-    offs, off = [], 0.0
-    for pid, c in cells:
-        offs.append((pid, off))
-        off += float(c)
-    odf = F.broadcast(
-        spark.createDataFrame(offs or [(0, 0.0)], "pid int, off double")
-    )
-    # Address each target to the FIRST partition whose cumulative
-    # weight reaches it (the driver already holds the prefix sums):
-    # the min-v row for a target always lives in that partition, so the
-    # selection join probes ~|qs| partitions instead of cross-joining
-    # every row against every target.
-    targets = []
-    w_of = dict(cells)
-    for q in qs:
-        t = float(q) * total_w
-        # Fall back to the LAST partition when float rounding with
-        # non-integer weights leaves every prefix sum just short of
-        # the target (ADVICE r6): the max-cumulative-weight partition
-        # still holds the answer row, so the quantile cannot silently
-        # vanish from the output.
-        holder = offs[-1][0] if offs else 0
-        for pid, start in offs:
-            if start + float(w_of.get(pid, 0.0)) >= t:
-                holder = pid
-                break
-        targets.append((holder, float(q), t))
-    tdf = F.broadcast(
-        spark.createDataFrame(targets or [(0, 0.0, 0.0)], "pid int, q double, target double")
-    )
-    cw_local = F.sum("w").over(W.partitionBy("pid").orderBy("v"))
-    cw = s.join(odf, "pid").withColumn("cw", F.col("off") + cw_local)
-    # Selection tolerance (ADVICE r6, second half): with fractional
-    # weights the window-accumulated cw can round a few ulps below a
-    # target computed from differently-ordered driver sums, and an
-    # exact `cw >= target` would then drop the quantile row entirely.
-    # ADVICE r7 refinement: a FLAT 1e-9 fraction of total weight can
-    # exceed a legitimate weight gap once total_w is large, selecting
-    # the preceding value. So: integer-valued weights (cumulative sums
-    # exact in doubles up to 2^53) get eps = 0 — exact selection; and
-    # fractional weights get an epsilon scaled to the worst-case
-    # ACCUMULATED summation error, n_rows additions each off by at
-    # most one ulp of the running total (<= ulp(total_w)). ADVICE r8:
-    # the target side (q * total_w, where total_w comes from driver
-    # partial sums added in a different order) carries its own
-    # comparable accumulation error, so cover BOTH sides of the
-    # comparison with 2x — still orders of magnitude below any
-    # legitimate weight gap.
-    eps = 0.0 if integral_w else 2.0 * n_rows * math.ulp(max(total_w, 1.0))
-    return (
-        cw.join(tdf, "pid")
-        .where(F.col("cw") >= F.col("target") - F.lit(eps))
-        .groupBy("q")
-        .agg(
-            f32(F.min("v")).alias("wq"),
-            F.first(F.lit(total_w)).alias("total_weight"),
-        )
     )

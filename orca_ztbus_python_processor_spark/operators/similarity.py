@@ -8,9 +8,8 @@ layout for cosine search at scale:
   1. train ``nlist`` spherical k-means centroids on a driver-side
      SAMPLE (seeded, deterministic — at 100 TB you train the coarse
      quantizer on a sample regardless of engine);
-  2. assign every corpus vector to its nearest centroid (JVM-side:
-     centroid matrix enters the plan as array literals; argmax via
-     max of (dot, idx) structs) — a map-only pass;
+  2. assign every corpus vector to its nearest centroid (one numpy
+     matmul per Arrow batch) — a map-only pass;
   3. each query probes its ``nprobe`` nearest cells; candidates are
      the union of those inverted lists (equi-join on cell id — the
      brute-force cross join disappears);
@@ -113,29 +112,6 @@ def train_centroids(
                     c = c.astype(np.float32).astype(np.float64)
                 centroids[j] = c
     return centroids.tolist()
-
-
-def _cell_scores(emb: Column, centroids: list[list[float]]) -> Column:
-    """Array of struct(dot, cell_idx) for every centroid."""
-    return F.array(
-        *[
-            F.struct(
-                _dot_literal(emb, c).alias("dot"), F.lit(j).alias("cell")
-            )
-            for j, c in enumerate(centroids)
-        ]
-    )
-
-
-def assign_cell(emb: Column, centroids: list[list[float]]) -> Column:
-    """Nearest-centroid id (struct max orders by dot, then cell)."""
-    return F.array_max(_cell_scores(emb, centroids))["cell"]
-
-
-def probe_cells(emb: Column, centroids: list[list[float]], nprobe: int) -> Column:
-    """The nprobe nearest centroid ids, as an array."""
-    sorted_desc = F.reverse(F.array_sort(_cell_scores(emb, centroids)))
-    return F.transform(F.slice(sorted_desc, 1, nprobe), lambda s: s["cell"])
 
 
 def _cells_pandas(

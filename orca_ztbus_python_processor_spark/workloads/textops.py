@@ -876,7 +876,8 @@ def zipf_token_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
 CROSS_SOURCE_SPAN_K = 13
 
 _CSD_TOKENS = "regexp_extract_all(lower(text), '[a-z0-9]+', 0)"
-# Let-bind the token array (operators.dedup._bind): referencing
+# Let-bind the token array (a single-element transform(), whose
+# lambda variable is evaluated once): referencing
 # _CSD_TOKENS directly inside the gram lambda lets CollapseProject
 # inline it, re-running the regex tokenizer once PER GRAM (~spans/doc
 # times) instead of once per doc — measured 4.4 s -> ~1 s at sf0.1.
@@ -2750,8 +2751,8 @@ def boilerplate_shingle_share(spark: SparkSession, sf_dir: str) -> DataFrame:
 # n_chars per source against the corpus decile grid, with per-decile
 # ratios. The "is this source's length profile shifted" curation
 # diagnostic, the tabular form of a QQ plot. Both sides ride
-# functions.quantiles.exact_group_quantiles — range-repartition +
-# scalar counts matrix + partition-bounded local-rank windows, NO
+# functions.quantiles.exact_group_quantiles — histogram selection
+# (per-bucket counts to the driver, one bounded fetch), NO
 # per-group value buffer (F.percentile's buffer is the documented
 # scale wall at corpus grain) — so the plan survives sources of any
 # size. Interpolation is quantile_cont semantics on both engines;

@@ -1193,9 +1193,8 @@ def test_penny_allocation_one_key_exchange(spark, catalog):
 
 
 def test_weighted_quantiles_no_global_window(spark, catalog):
-    """Weighted quantiles ride the range-repartition + pid-window
-    addressing: zero unpartitioned windows (each window cell is bounded
-    by partition size), targets enter via broadcast."""
+    """Weighted quantiles ride histogram selection: the returned frame
+    is driver-built, so zero unpartitioned windows and no Python."""
     df = catalog.queries["weighted_price_quantiles"](spark, SMOKE_SF_DIR)
     assert _unpartitioned_windows(df) == 0
     plan = _plan(spark, df)

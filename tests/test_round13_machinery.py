@@ -6,8 +6,8 @@ Each optimized operator is differentially pinned against an
 independent reference — pandas/numpy order statistics for the
 selection core, the proven range-shuffle ``with_global_ntile`` for the
 cut form — on adversarial shapes: heavy ties, n < k, single row,
-descending keys, multi-spec batching, NaN fallback routing, and the
-driver-collect cardinality guard.
+descending keys, multi-spec batching, NaN/±Inf values, long keys past
+2^53, non-finite weights, and the driver-collect cardinality guard.
 """
 
 from __future__ import annotations
@@ -28,6 +28,7 @@ from orca_ztbus_python_processor_spark.functions.quantiles import (
 )
 from orca_ztbus_python_processor_spark.functions.ranks import (
     with_global_ntile,
+    with_global_ntile_cuts,
     with_global_ntiles_cuts,
 )
 
@@ -108,12 +109,102 @@ def test_exact_weighted_quantiles_integral_weights(spark):
         assert out.loc[q, "total_weight"] == total
 
 
-def test_nan_values_route_to_shuffle_fallback(spark):
-    rows = [("a", 1.0), ("a", float("nan")), ("a", 3.0), ("b", 2.0)]
-    df = spark.createDataFrame(rows, "g string, v double")
-    out = exact_group_quantiles(df, "g", "v", qs=(0.5,)).toPandas()
-    # the shuffle form computes; NaN sorts greatest in Spark
-    assert set(out["g"]) == {"a", "b"}
+_INF, _NAN = float("inf"), float("nan")
+# Spark's ascending order: -Inf < finite < +Inf < NaN
+_NONFINITE_ROWS = [
+    ("a", 1.0), ("a", _NAN), ("a", _INF), ("a", -_INF), ("a", 3.0),
+    ("b", 2.0), ("b", 4.0), ("b", 6.0),
+]
+
+
+def _same(got, exp) -> bool:
+    return (math.isnan(got) and math.isnan(exp)) or got == exp
+
+
+def test_nonfinite_group_quantiles_values(spark):
+    df = spark.createDataFrame(_NONFINITE_ROWS, "g string, v double")
+    out = (
+        exact_group_quantiles(df, "g", "v", qs=(0, 0.1, 0.5, 0.9, 1))
+        .toPandas()
+        .set_index("g")
+    )
+    cols = ["p0", "p10", "p50", "p90", "p100"]
+    assert out.loc["a", "n"] == 5 and out.loc["b", "n"] == 3
+    # a sorted: -inf, 1, 3, +inf, nan; interpolation propagates inf/nan
+    for col, exp in zip(cols, [-_INF, -_INF, 3.0, _NAN, _NAN]):
+        assert _same(float(out.loc["a", col]), exp), (col, out.loc["a", col])
+    # b: 2, 4, 6 at ranks 0, .2, 1, 1.8, 2
+    for col, exp in zip(cols, [2.0, 2.4, 4.0, 5.6, 6.0]):
+        assert out.loc["b", col] == pytest.approx(exp, rel=1e-6), col
+
+
+def test_nonfinite_group_rank_values(spark):
+    df = spark.createDataFrame(_NONFINITE_ROWS, "g string, v double")
+    out = (
+        exact_group_rank_values(
+            df, "g", "v", lambda n: {"r1": 1, "r2": 2, "rn1": n - 1, "rn": n}
+        )
+        .toPandas()
+        .set_index("g")
+    )
+    for col, exp in zip(["r1", "r2", "rn1", "rn"], [-_INF, 1.0, _INF, _NAN]):
+        assert _same(float(out.loc["a", col]), exp), (col, out.loc["a", col])
+    assert list(out.loc["b", ["r1", "r2", "rn1", "rn"]]) == [2.0, 4.0, 4.0, 6.0]
+
+
+def test_nonfinite_weighted_quantiles(spark):
+    # cumulative weight: -inf 1, 1.0 3, 2.0 4, +inf 6
+    rows = [(-_INF, 1.0), (1.0, 2.0), (2.0, 1.0), (_INF, 2.0)]
+    df = spark.createDataFrame(rows, "v double, w double")
+    qs = (0.0, 0.1, 0.5, 0.6, 0.9, 1.0)
+    out = {
+        r["q"]: r["wq"]
+        for r in exact_weighted_quantiles(df, "v", "w", qs=qs).collect()
+    }
+    assert out == {0.0: -_INF, 0.1: -_INF, 0.5: 1.0, 0.6: 2.0, 0.9: _INF, 1.0: _INF}
+    # a weighted NaN value sorts last, so only q=1 reaches it
+    nan_df = spark.createDataFrame(rows + [(_NAN, 2.0)], "v double, w double")
+    got = {
+        r["q"]: r["wq"]
+        for r in exact_weighted_quantiles(nan_df, "v", "w", qs=(0.75, 1.0)).collect()
+    }
+    assert got[0.75] == _INF and math.isnan(got[1.0])
+
+
+@pytest.mark.parametrize("bad_w", [_NAN, _INF])
+def test_weighted_quantiles_reject_nonfinite_weights(spark, bad_w):
+    df = spark.createDataFrame([(1.0, 1.0), (2.0, bad_w), (3.0, 2.0)], "v double, wt double")
+    with pytest.raises(ValueError, match="'wt'"):
+        exact_weighted_quantiles(df, "v", "wt", qs=(0.5,))
+
+
+def _spark_jobs(spark, fn) -> int:
+    """Spark jobs launched while ``fn()`` runs (job group + statusTracker)."""
+    sc = spark.sparkContext
+    group = f"count-jobs-{random.random()}"
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc._jsc.clearJobGroup()
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_weighted_quantiles_one_selection(spark):
+    """Weighted selection costs what unweighted selection does on the
+    same rows: pass 1 plus one fetch of the (small) finite block."""
+    rng = random.Random(17)
+    rows = [(float(rng.randint(0, 999)), float(rng.randint(1, 9))) for _ in range(5000)]
+    df = spark.createDataFrame(rows, "v double, w double").withColumn("g", F.lit("x"))
+    df.count()  # materialize the local relation outside the counted region
+    weighted = _spark_jobs(
+        spark, lambda: exact_weighted_quantiles(df, "v", "w", qs=(0.1, 0.5, 0.9))
+    )
+    unweighted = _spark_jobs(
+        spark, lambda: exact_group_quantiles(df, "g", "v", qs=(0.1, 0.5, 0.9))
+    )
+    assert weighted == unweighted, (weighted, unweighted)
 
 
 def test_group_guard_message():
@@ -199,6 +290,14 @@ def test_ntile_cuts_nan_falls_back(spark):
         .reset_index(drop=True)
     )
     assert old.equals(new)  # identical because the fallback IS the old form
+
+
+def test_ntile_cuts_long_keys_past_2_53(spark):
+    """Longs at or above 2^53 collapse in a double proxy; such a spec
+    must take the shuffle form and keep exact NTILE buckets."""
+    df = spark.createDataFrame([(2**53 + i,) for i in range(8)], "k long")
+    out = with_global_ntile_cuts(df, 4, [("k", False)], "d").orderBy("k")
+    assert [r["d"] for r in out.collect()] == [1, 1, 2, 2, 3, 3, 4, 4]
 
 
 def test_ntile_cuts_timestamp_key(spark):
